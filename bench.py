@@ -124,6 +124,41 @@ def time_queries(
     return per_query, errors
 
 
+# The driver captures only the LAST 2000 chars of stdout (round 1's 5 KB
+# line lost its head and parsed as null).
+LINE_BUDGET = 1900
+
+
+def summary_line(
+    head: dict, per_query: dict[str, float], window_path: str
+) -> str:
+    """The printed JSON line: ``head`` plus a ``queries`` map of the
+    window printed LAST round (``window_path``, reseeded at round close;
+    optional) followed by the slowest 40 now. Carrying the previous
+    window forward keeps the round-over-round diff from churning on ops
+    that merely IMPROVED out of the slowest 40 (round-11 VERDICT item
+    7). The map is cut from its tail until the line fits LINE_BUDGET:
+    the fastest current extras go first, then the carried window's
+    tail, so an oversized window can never overflow the capture."""
+    try:
+        with open(window_path) as f:
+            window = [n for n in json.load(f) if n in per_query]
+    except Exception:  # noqa: BLE001 — seed file is optional
+        window = []
+    by_slowest = sorted(per_query, key=lambda n: -per_query[n])
+    names = window + [n for n in by_slowest[:40] if n not in set(window)]
+
+    def line() -> str:
+        queries = {n: per_query[n] for n in names}
+        return json.dumps({**head, "queries": queries}, separators=(",", ":"))
+
+    out = line()
+    while len(out) > LINE_BUDGET and names:
+        names.pop()
+        out = line()
+    return out
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # 3 interleaved rounds: under bursty host load (measured ±3× swings
@@ -222,51 +257,20 @@ def main() -> int:
     if len(sys.argv) <= 1:
         with open(os.path.join(REPO, "BENCH_FULL.json"), "w") as f:
             json.dump(full, f, indent=1, sort_keys=True)
-    # Printed window = slowest-40 NOW, UNION the window printed LAST
-    # round (seed file bench_window.json, reseeded at round close).
-    # Round-11 VERDICT item 7: the bare slowest-40 window made the
-    # driver's round-over-round diff mostly churn — 17 ops "dropped from
-    # bench" that had merely IMPROVED out of the window. Carrying the
-    # previous window forward means an op can only leave the printed map
-    # by actually failing or being removed. The whole line must stay
-    # under the driver's 2000-char stdout capture (round 1's 5 KB line
-    # lost its head and parsed as null), so prev-window names are
-    # mandatory and extra current-slowest entries fill the remaining
-    # byte budget in descending-time order.
-    prev_window: list[str] = []
-    try:
-        with open(os.path.join(REPO, "bench_window.json")) as f:
-            prev_window = [n for n in json.load(f) if n in per_query]
-    except Exception:  # noqa: BLE001 — seed file is optional
-        pass
-    by_slowest = sorted(per_query.items(), key=lambda kv: -kv[1])
-    extras = [n for n, _ in by_slowest[:40] if n not in set(prev_window)]
-
-    def _line(sel: dict[str, float]) -> str:
-        return json.dumps(
-            {
-                "metric": "p50_query_seconds",
-                "value": round(p50, 4),
-                "unit": "sec",
-                "queries": sel,
-                "sf": sf,
-                "n_queries": len(per_query),
-                "p95": p95,
-                "n_errors": len(errors),
-                "n_prewarm_errors": len(prewarm_errors),
-                "blas_probe_threads": probe.get("openblas_threads"),
-                "provenance": provenance,
-                "queries_note": "slowest40+prev window; full map in BENCH_FULL.json",
-            },
-            separators=(",", ":"),
-        )
-
-    names = prev_window + extras  # extras already descending by time
-    sel = {n: per_query[n] for n in names}
-    while len(_line(sel)) > 1900 and len(names) > len(prev_window):
-        names.pop()  # drop the fastest non-mandatory extras first
-        sel = {n: per_query[n] for n in names}
-    print(_line(sel))
+    head = {
+        "metric": "p50_query_seconds",
+        "value": round(p50, 4),
+        "unit": "sec",
+        "sf": sf,
+        "n_queries": len(per_query),
+        "p95": p95,
+        "n_errors": len(errors),
+        "n_prewarm_errors": len(prewarm_errors),
+        "blas_probe_threads": probe.get("openblas_threads"),
+        "provenance": provenance,
+        "queries_note": "slowest40+prev window; full map in BENCH_FULL.json",
+    }
+    print(summary_line(head, per_query, os.path.join(REPO, "bench_window.json")))
     return 0
 
 

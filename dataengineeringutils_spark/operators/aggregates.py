@@ -23,7 +23,11 @@ from dataengineeringutils_spark.exprs import (
     o_money_sum,
 )
 from dataengineeringutils_spark.registry import query
-from dataengineeringutils_spark.tables import spread_small_scan, table
+from dataengineeringutils_spark.tables import (
+    local_table,
+    spread_small_scan,
+    table,
+)
 
 
 @query(
@@ -938,6 +942,8 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     totalweight`` stays in exact DECIMAL, and a conditional-MIN picks
     the crossing value — PERCENTILE_DISC generalized to weights.
     """
+    from decimal import Decimal
+
     from dataengineeringutils_spark.artifacts import json_artifact
 
     li = table(spark, sf_dir, "lineitem").select(
@@ -1011,14 +1017,13 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
 
     targets_rows = json_artifact(sf_dir, "wmedian_targets", _targets)
-    targets = spark.createDataFrame(
-        [(g, int(b), off, tw) for g, b, off, tw in targets_rows],
-        "l_returnflag string, bkt int, off string, tw string",
-    ).select(
-        "l_returnflag",
-        "bkt",
-        F.col("off").cast("decimal(18,2)").alias("off"),
-        F.col("tw").cast("decimal(18,2)").alias("tw"),
+    targets = local_table(
+        spark,
+        [
+            (g, int(b), Decimal(off), Decimal(tw))
+            for g, b, off, tw in targets_rows
+        ],
+        "l_returnflag string, bkt int, off decimal(18,2), tw decimal(18,2)",
     )
     # Push the target buckets' PRICE RANGES into the scan: the selection
     # phase only reads rows of the <=|groups| crossing buckets (~1/32 of

@@ -27,7 +27,11 @@ from dataengineeringutils_spark.exprs import (
     revenue,
 )
 from dataengineeringutils_spark.registry import query
-from dataengineeringutils_spark.tables import spread_small_scan, table
+from dataengineeringutils_spark.tables import (
+    local_table,
+    spread_small_scan,
+    table,
+)
 
 
 @query(
@@ -1050,7 +1054,7 @@ def orders_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in bmax:
         data.append((r["__bkt"], carry))
         carry = r["mx"] if carry is None else max(carry, r["mx"])
-    prev = spark.createDataFrame(data, "__bkt int, __carry long")
+    prev = local_table(spark, data, "__bkt int, __carry long")
     price_key = F.round(F.col("o_totalprice") * 100).cast("long")
     w = (
         Window.partitionBy("__bkt")

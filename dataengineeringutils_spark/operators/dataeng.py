@@ -1363,11 +1363,11 @@ def dq_fanout_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
         F.coalesce("n_items", F.lit(0)).cast("bigint").alias("n_items"),
     )
-    # Median TWO-PHASE (windows.grouped_percentile_disc): fan counts
-    # concentrate on a handful of small integers, so the value-collapse
+    # Median via windows.grouped_percentile_disc: at scale fan counts
+    # concentrate on a handful of small integers, so its value-collapse
     # shrinks the frame to |distinct counts| rows per group and equal
-    # counts can never split a sorting partition — where the former
-    # keyed rank window sorted a fifth of the parents on one task.
+    # counts can never split a sorting partition — where a keyed rank
+    # window would sort a fifth of the parents on one task.
     from dataengineeringutils_spark.operators.windows import (
         grouped_percentile_disc,
         table_rows,
@@ -1381,7 +1381,7 @@ def dq_fanout_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["o_orderpriority"],
             "ni",
             # tiny integer domain: fixed cuts are real value boundaries
-            [1.0, 2.0, 4.0, 8.0, 16.0, 64.0],
+            lambda: [1.0, 2.0, 4.0, 8.0, 16.0, 64.0],
             [0.50],
             n_rows=table_rows(spark, sf_dir, "orders"),
         )
@@ -1681,12 +1681,12 @@ def dq_outlier_iqr_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     low/high outlier counts — the robust screening that MAD (B169) and
     winsorization (B155) both start from, as a standing DQ report.
 
-    Pass 1 selects the exact quartiles TWO-PHASE
-    (windows.grouped_percentile_disc — value-collapsed, bounded bucket
-    windows; the naive keyed rank over the 5-value priority key sorts
-    a fifth of the table on one task at scale); pass 2 rejoins the
-    tiny quartile frame broadcast and counts fence violations — two
-    scans, both keyed, no unbounded sort anywhere.
+    Pass 1 selects the exact quartiles with
+    windows.grouped_percentile_disc (one keyed sort on small inputs;
+    at scale value-collapsed, bounded bucket windows, since the keyed
+    rank over the 5-value priority key would sort a fifth of the table
+    on one task); pass 2 rejoins the tiny quartile frame broadcast and
+    counts fence violations — two scans, both keyed.
     """
     from dataengineeringutils_spark.operators.windows import (
         grouped_percentile_disc,
@@ -1697,9 +1697,12 @@ def dq_outlier_iqr_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders").select(
         "o_orderpriority", "o_totalprice"
     )
-    cuts = sampled_cuts(spark, sf_dir, "orders_price_cuts", o, "o_totalprice")
     pd = grouped_percentile_disc(
-        o, ["o_orderpriority"], "o_totalprice", cuts, [0.25, 0.75],
+        o, ["o_orderpriority"], "o_totalprice",
+        lambda: sampled_cuts(
+            spark, sf_dir, "orders_price_cuts", o, "o_totalprice"
+        ),
+        [0.25, 0.75],
         n_rows=table_rows(spark, sf_dir, "orders"),
     )
     q = pd.groupBy("o_orderpriority").agg(

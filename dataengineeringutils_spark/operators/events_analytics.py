@@ -3387,11 +3387,11 @@ def events_value_qq_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure scale shift; a ratio growing with p = the purchase tail is
     heavier), where a mean comparison says only THAT they differ.
 
-    One scan; the exact PERCENTILE_DISC positions come from the
-    TWO-PHASE value-collapsed selection
-    (windows.grouped_percentile_disc — a 2-value type key would put
-    half the events on one sorting task under the naive keyed rank),
-    then the 5-row p-grid pivots purchase vs click side by side — all
+    One scan; the exact PERCENTILE_DISC positions come from
+    windows.grouped_percentile_disc (one keyed sort on small inputs,
+    the value-collapsed two-phase selection at scale, where a 2-value
+    type key would put half the events on one sorting task under the
+    keyed rank), then the 5-row p-grid pivots purchase vs click side by side — all
     engine-portable integer count arithmetic, values straight from the
     data.
     """
@@ -3405,9 +3405,10 @@ def events_value_qq_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").isin("purchase", "click")
         & F.col("value").isNotNull()
     ).select("event_type", "value")
-    cuts = sampled_cuts(spark, sf_dir, "events_value_cuts", ev, "value")
     pd = grouped_percentile_disc(
-        ev, ["event_type"], "value", cuts, [0.1, 0.25, 0.5, 0.75, 0.9],
+        ev, ["event_type"], "value",
+        lambda: sampled_cuts(spark, sf_dir, "events_value_cuts", ev, "value"),
+        [0.1, 0.25, 0.5, 0.75, 0.9],
         n_rows=table_rows(spark, sf_dir, "events"),
     )
     return pd.groupBy("p").agg(

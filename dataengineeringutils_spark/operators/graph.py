@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineeringutils_spark.registry import query
-from dataengineeringutils_spark.tables import table
+from dataengineeringutils_spark.tables import local_table, table
 
 DOUBLING_ROUNDS = 4  # resolves hierarchies up to depth 2^4
 
@@ -490,7 +490,8 @@ def graph_kcore_2(spark: SparkSession, sf_dir: str) -> DataFrame:
                 n_core_edges = (
                     sum(len(adj[v] & alive) for v in alive) // 2
                 )
-                return spark.createDataFrame(
+                return local_table(
+                    spark,
                     [(n_nodes, n_core_nodes, n_core_edges)],
                     "n_nodes bigint, n_core_nodes bigint, n_core_edges bigint",
                 )

@@ -796,15 +796,14 @@ def agg_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     midpoints.
 
     Implemented from the definition — the smallest value whose
-    cumulative count reaches ceil(p*n) — via the TWO-PHASE
-    value-collapsed selection (windows.grouped_percentile_disc): the
-    5-value priority key makes the naive keyed rank window a
-    one-task-per-fifth-of-the-table sort at scale, while percentiles
-    need only VALUES, so the collapse + bounded bucket windows give
-    the identical numbers with every sorting partition bounded. Exact
-    by construction (integer counts, no float comparisons); equal
-    prices collapse to one value row so both engines pick the same
-    value without a row tiebreak.
+    cumulative count reaches ceil(p*n) — by
+    windows.grouped_percentile_disc: one keyed sort below its
+    TWO_PHASE_MIN_ROWS switch, and at scale the value-collapsed
+    two-phase selection (the 5-value priority key would make the keyed
+    rank window a one-task-per-fifth-of-the-table sort). Exact by
+    construction (integer ranks, no float comparisons); tied prices
+    are one value, so whichever row holds rank k both engines pick the
+    same value.
     """
     from dataengineeringutils_spark.operators.windows import (
         grouped_percentile_disc,
@@ -815,9 +814,11 @@ def agg_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders").select(
         "o_orderpriority", "o_totalprice"
     )
-    cuts = sampled_cuts(spark, sf_dir, "orders_price_cuts", o, "o_totalprice")
     pd = grouped_percentile_disc(
-        o, ["o_orderpriority"], "o_totalprice", cuts,
+        o, ["o_orderpriority"], "o_totalprice",
+        lambda: sampled_cuts(
+            spark, sf_dir, "orders_price_cuts", o, "o_totalprice"
+        ),
         [0.25, 0.50, 0.90, 1.0],
         n_rows=table_rows(spark, sf_dir, "orders"),
     )

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from dataengineeringutils_spark.blas import cap_blas_threads
 from dataengineeringutils_spark.registry import query
-from dataengineeringutils_spark.tables import table
+from dataengineeringutils_spark.tables import local_table, table
 
 
 def dot(a: str | Column, b: str | Column) -> Column:
@@ -996,7 +996,15 @@ def sim_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids round 6 dp in both engines so mean ulps can't flip the next
     assignment; ties on distance break by cluster id.
     """
-    e = table(spark, sf_dir, "embeddings")
+    return kmeans_lloyd(table(spark, sf_dir, "embeddings"))
+
+
+def kmeans_lloyd(e: DataFrame) -> DataFrame:
+    """``sim_kmeans_lloyd`` over any (vec_id, embedding) frame ``e``:
+    per-cluster (cluster_id, n_members, avg_dist) after two Lloyd
+    iterations from the 4 smallest vec_ids. A cluster left empty by an
+    iteration has no centroid rows, so it has no distance and never
+    wins an argmin; it is absent from the output."""
     dims = e.select("vec_id", F.posexplode("embedding").alias("i0", "xf")).select(
         "vec_id",
         (F.col("i0") + 1).alias("i"),
@@ -1043,8 +1051,13 @@ def sim_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             F.least(
                 *[
+                    # an empty cluster's distance is NULL, and NULL
+                    # would sort first in the struct order: +inf instead
                     F.struct(
-                        F.col(f"d{c}").alias("dst"), F.lit(c).alias("cid")
+                        F.coalesce(
+                            F.col(f"d{c}"), F.lit(float("inf"))
+                        ).alias("dst"),
+                        F.lit(c).alias("cid"),
                     )
                     for c in range(4)
                 ]
@@ -1309,8 +1322,8 @@ def embeddings_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = [
         (int(i), float(_dec(vj, Decimal("1e-6"))), eig) for vj, i in loadings
     ]
-    return spark.createDataFrame(
-        out, "dim_i bigint, loading double, eigenvalue_est double"
+    return local_table(
+        spark, out, "dim_i bigint, loading double, eigenvalue_est double"
     )
 
 
@@ -1591,7 +1604,7 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
         (i + 1, v, float(Decimal(repr(rels[v])).quantize(Decimal("1e-6"), ROUND_HALF_UP)))
         for i, v in enumerate(picked)
     ]
-    return spark.createDataFrame(out, "pick int, vec_id bigint, relevance double")
+    return local_table(spark, out, "pick int, vec_id bigint, relevance double")
 
 
 @query(

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineeringutils_spark.registry import query
-from dataengineeringutils_spark.tables import table
+from dataengineeringutils_spark.tables import local_table, table
 
 
 @query(
@@ -234,17 +234,10 @@ def agg_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     jvm = spark.sparkContext._jvm
     bis = jvm.java.io.ByteArrayInputStream(bytes(sk_row["sk"]))
     cms = jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(bis)
-    import pandas as pd
-
-    estimates = pd.DataFrame(
-        {
-            "o_custkey": CMS_KEYS,
-            "est": [cms.estimateCount(k) for k in CMS_KEYS],
-        }
-    )
-    # pandas -> Arrow local relation (JVM-side; no Python-worker eval)
-    est = spark.createDataFrame(estimates).select(
-        F.col("o_custkey").cast("bigint"), F.col("est").cast("bigint")
+    est = local_table(
+        spark,
+        [(k, cms.estimateCount(k)) for k in CMS_KEYS],
+        "o_custkey bigint, est bigint",
     )
     exact = (
         o.filter(F.col("o_custkey").isin(CMS_KEYS))

@@ -27,7 +27,7 @@ from dataengineeringutils_spark.operators.dedup import (
     tokens_col,
 )
 from dataengineeringutils_spark.registry import query
-from dataengineeringutils_spark.tables import table
+from dataengineeringutils_spark.tables import local_table, table
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "for")
 
@@ -718,7 +718,7 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in runs:
         data.append((r["f"], off, r["cnt"]))
         off += r["cnt"]
-    runs_df = spark.createDataFrame(data, "f long, off long, cnt long")
+    runs_df = local_table(spark, data, "f long, off long, cnt long")
     chunk = 65536
     par = spark.sparkContext.defaultParallelism
     slices = runs_df.select(

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from dataengineeringutils_spark.meta import TableMeta, conform
 from dataengineeringutils_spark.registry import query
-from dataengineeringutils_spark.tables import table
+from dataengineeringutils_spark.tables import local_table, table
 
 # Metadata fixture for `customer` (FIXTURES.md "Reference-style metadata
 # fixture"): declares c_nationkey as `long` so the conformance cast is a
@@ -91,20 +91,14 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     good = table(spark, sf_dir, "nation").selectExpr(
         "concat_ws(',', n_nationkey, n_name, n_regionkey) AS line"
     )
-    import pandas as pd
-
-    # pandas -> Arrow local relation: evaluated JVM-side; a plain Python
-    # list would round-trip through a Python worker (~seconds cold)
-    bad = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "line": [
-                    "not_a_number,BROKENLAND,9",
-                    "42,MISSING_FIELD",
-                    ",,,,too,many,fields",
-                ]
-            }
-        )
+    bad = local_table(
+        spark,
+        [
+            ("not_a_number,BROKENLAND,9",),
+            ("42,MISSING_FIELD",),
+            (",,,,too,many,fields",),
+        ],
+        "line string",
     )
     good.unionByName(bad).coalesce(1).write.mode("overwrite").text(out)
     back = spark.read.schema(
@@ -298,7 +292,7 @@ def scan_parquet_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["table_name", "num_rows"])
 
     return (
-        spark.createDataFrame(paths, "table_name string, path string")
+        local_table(spark, paths, "table_name string, path string")
         .repartition(len(paths))
         .mapInPandas(footer_stats, "table_name string, num_rows long")
     )

@@ -102,6 +102,28 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def local_table(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """A driver-side list of tuples as a JVM ``LocalTableScan`` with the
+    DDL schema ``ddl`` (e.g. ``"k int, v bigint"``).
+
+    The rows travel as a ``pyarrow.Table`` typed from the DDL, so a
+    ``None`` stays NULL in any column type (a pandas frame would turn an
+    integer column with a NULL into doubles). A plain Python list given
+    to ``createDataFrame`` instead plans as ``Scan ExistingRDD`` over a
+    Python RDD: every execution then waits on Python workers to serve a
+    few literal rows inside an otherwise JVM-only plan."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = to_arrow_schema(_parse_datatype_string(ddl))
+    return spark.createDataFrame(
+        pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=schema
+        )
+    )
+
+
 _TS_BOUNDS_CACHE: dict[tuple[str, str], tuple] = {}
 
 

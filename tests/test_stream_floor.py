@@ -1,12 +1,14 @@
-"""Formal floor measurement for the two streaming ops above the 2.0 s
-bench line (round-6 VERDICT #2c/#2d): their cost is dominated by the
-FRESH-QUERY machinery every Structured Streaming availableNow run pays
-(query planning, checkpoint+offset-log setup, stream thread start/stop,
-micro-batch commit) — NOT by their own plans. This test measures that
-shared floor with a minimal JVM-only streaming query in the same
-session, then asserts each op stays within a bounded overhead of it,
-and records the measurement to STREAM_FLOOR.json so the bench line is
-excepted by artifact rather than silently exceeded.
+"""The two streaming ops above the 2.0 s bench line stay floor-bound.
+
+Their cost is dominated by the FRESH-QUERY machinery every Structured
+Streaming availableNow run pays (query planning, checkpoint+offset-log
+setup, stream thread start/stop, micro-batch commit), NOT by their own
+plans. STREAM_FLOOR.json records that floor per class, measured by
+``tools/stream_floor.py``; this test asserts each op's best-of-3 within
+a bounded overhead of the COMMITTED floor of its class, and that one
+more micro-batch of a long-lived stream costs less than that floor. It
+never writes the file: refresh it with
+``python tools/stream_floor.py --out STREAM_FLOOR.json --sf-dir DIR``.
 
 On a long-lived production stream this per-query cost amortizes to
 zero: the floor is paid once at deployment, not per micro-batch
@@ -15,358 +17,49 @@ zero: the floor is paid once at deployment, not per micro-batch
 
 from __future__ import annotations
 
-import itertools
 import json
 import os
-import time
 
-from dataengineeringutils_spark.paths import ram_scratch_dir, scratch_dir
-from dataengineeringutils_spark.registry import queries
+from tools.stream_floor import (
+    ADD_BOUND_S,
+    FLOOR_OF,
+    MULT_BOUND,
+    measure_marginals,
+    op_best_times,
+    within_bound,
+)
 
-_ctr = itertools.count()
-
-# op best-of-3 must stay within BOTH bounds of the floor best-of-3:
-# a multiplicative one (the op is "a small constant factor over the
-# machinery") and an additive cap on its own plan's contribution.
-MULT_BOUND = 3.0
-ADD_BOUND_S = 2.0
-
-
-def _floor_probe(spark) -> float:
-    """One fresh minimal streaming query: 1-row parquet file source ->
-    trivial select -> memory sink, availableNow. Everything it does is
-    also done by every streaming op; nothing in it is op-specific."""
-    src = scratch_dir("floor_src")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        spark.range(1).coalesce(1).write.mode("overwrite").parquet(src)
-    name = f"floor_sink_{next(_ctr)}"
-    t0 = time.perf_counter()
-    q = (
-        spark.readStream.schema("id long")
-        .parquet(src)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ram_scratch_dir(f"ck_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return time.perf_counter() - t0
+COMMITTED = os.path.join(
+    os.path.dirname(__file__), "..", "STREAM_FLOOR.json"
+)
 
 
-def _py_floor_probe(spark) -> float:
-    """One fresh minimal PYTHON-DataSource streaming query: the SAME
-    QueueDataSource the queue op uses, on a 1-message 1-partition queue.
-    Its cost is the Python stream-source protocol itself — datasource
-    registration, driver-side offset RPC, one executor Python worker —
-    with effectively zero data."""
-    import dataengineeringutils_spark.sources.python_stream_source as pss
-
-    base = scratch_dir("floor_pysrc")
-    seg = os.path.join(base, "p=0")
-    if not os.path.exists(seg):
-        os.makedirs(seg, exist_ok=True)
-        with open(os.path.join(seg, "00000000.json"), "w") as f:
-            f.write('{"event_id": 1, "event_type": "a", "value": 1.0}\n')
-    spark.dataSource.register(pss.QueueDataSource)
-    name = f"floor_pysink_{next(_ctr)}"
-    t0 = time.perf_counter()
-    q = (
-        spark.readStream.format("file_queue")
-        .option("path", base)
-        .load()
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ram_scratch_dir(f"ck_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return time.perf_counter() - t0
-
-
-def _stateful_floor_probe(spark) -> float:
-    """One fresh minimal STATEFUL streaming query: two 1-row parquet
-    sources, watermarks, left-outer stream-stream join, append sink.
-    Its cost is the stateful machinery the outer-join op cannot avoid —
-    state-store instances (4 per partition per side), per-batch state
-    commits, and the mandatory second micro-batch in which the
-    watermark advances and unmatched rows are evicted — with
-    effectively zero data."""
-    from pyspark.sql import functions as F
-
-    src = scratch_dir("floor_state_src")
-    if not os.path.exists(os.path.join(src, "a", "_SUCCESS")):
-        df = spark.createDataFrame(
-            [(1, "2024-01-01 00:00:00")], "id long, ts_s string"
-        ).select("id", F.col("ts_s").cast("timestamp").alias("ts"))
-        df.coalesce(1).write.mode("overwrite").parquet(os.path.join(src, "a"))
-        df.coalesce(1).write.mode("overwrite").parquet(os.path.join(src, "b"))
-    name = f"floor_state_{next(_ctr)}"
-    a = (
-        spark.readStream.schema("id long, ts timestamp")
-        .parquet(os.path.join(src, "a"))
-        .withWatermark("ts", "1 hour")
-    )
-    b = (
-        spark.readStream.schema("id long, ts timestamp")
-        .parquet(os.path.join(src, "b"))
-        .withWatermark("ts", "1 hour")
-        .select(F.col("id").alias("b_id"), F.col("ts").alias("b_ts"))
-    )
-    joined = a.join(
-        b,
-        (F.col("id") == F.col("b_id"))
-        & (F.col("b_ts") >= F.col("ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("b_ts") <= F.col("ts")),
-        "left_outer",
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    t0 = time.perf_counter()
-    try:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ram_scratch_dir(f"ck_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return time.perf_counter() - t0
-
-
-# which floor each op is bounded against: the queue op pays the Python
-# DataSource protocol by construction; the outer join pays the stateful
-# join + watermark-eviction machinery
-FLOOR_OF = {
-    "stream_python_queue_source": "python_source",
-    "stream_outer_join_watermark": "stateful_join",
-}
+def _committed() -> dict:
+    with open(COMMITTED) as f:
+        return json.load(f)
 
 
 def test_streaming_ops_are_floor_bound(spark, sf_dir):
-    qs = queries()
-    ops = list(FLOOR_OF)
-    # warm every cached fixture / JIT path once, outside the timing
-    for name in ops:
-        qs[name](spark, sf_dir).count()
-    _floor_probe(spark)
-    _py_floor_probe(spark)
-    _stateful_floor_probe(spark)
-
-    # interleaved best-of-3: a host-load burst hits at most one round,
-    # and hits floor and op runs alike
-    floor_times: dict[str, list[float]] = {
-        "jvm": [],
-        "python_source": [],
-        "stateful_join": [],
-    }
-    op_times: dict[str, list[float]] = {n: [] for n in ops}
-    for _ in range(3):
-        floor_times["jvm"].append(_floor_probe(spark))
-        floor_times["python_source"].append(_py_floor_probe(spark))
-        floor_times["stateful_join"].append(_stateful_floor_probe(spark))
-        for name in ops:
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).count()
-            op_times[name].append(time.perf_counter() - t0)
-
-    floors = {k: min(v) for k, v in floor_times.items()}
-    report = {
-        "floors_sec": {k: round(v, 4) for k, v in floors.items()},
-        "bounds": {"mult": MULT_BOUND, "add_sec": ADD_BOUND_S},
-        "ops": {},
-    }
-    for name in ops:
-        best = min(op_times[name])
+    report = _committed()
+    assert report["bounds"] == {"mult": MULT_BOUND, "add_sec": ADD_BOUND_S}
+    floors = report["floors_sec"]
+    for name, best in op_best_times(spark, sf_dir).items():
         floor = floors[FLOOR_OF[name]]
-        report["ops"][name] = {
-            "best_sec": round(best, 4),
-            "floor": FLOOR_OF[name],
-            "overhead_sec": round(best - floor, 4),
-        }
-        assert best <= max(MULT_BOUND * floor, floor + ADD_BOUND_S), (
+        assert within_bound(best, floor), (
             f"{name}: {best:.2f}s exceeds its {FLOOR_OF[name]} floor bound "
-            f"(floor {floor:.2f}s x{MULT_BOUND} / +{ADD_BOUND_S}s) — "
-            "its own plan got more expensive, not just the machinery"
-        )
-    report["amortization"] = _measure_marginals(spark, floors)
-    # Provenance stamp (round-10 VERDICT #4): record which commit
-    # produced this artifact so a stale/modified file is identifiable.
-    import subprocess
-
-    try:
-        report["provenance"] = {
-            "source": "tests/test_stream_floor.py",
-            "commit": subprocess.run(
-                ["git", "rev-parse", "--short", "HEAD"],
-                capture_output=True,
-                text=True,
-                cwd=os.path.join(os.path.dirname(__file__), ".."),
-                timeout=10,
-            ).stdout.strip()
-            or None,
-        }
-    except Exception:  # noqa: BLE001 — provenance is informational only
-        report["provenance"] = {"source": "tests/test_stream_floor.py"}
-    out = os.path.join(os.path.dirname(__file__), "..", "STREAM_FLOOR.json")
-    with open(out, "w") as f:
-        json.dump(report, f, indent=1, sort_keys=True)
-
-
-N_AMORT_BATCHES = 10
-
-
-def _marginal(progress) -> tuple[list[float], float]:
-    ds = [
-        p["durationMs"].get("triggerExecution", 0) / 1000.0 for p in progress
-    ]
-    import statistics
-
-    return ds, (statistics.median(ds[1:]) if len(ds) > 1 else float("nan"))
-
-
-def _measure_marginals(spark, floors: dict) -> dict:
-    """Amortization probes (round-7 VERDICT #5): run ONE long stream of
-    N_AMORT_BATCHES micro-batches per floor class and record the
-    MARGINAL per-batch cost (median triggerExecution of batches 2..N).
-    Turns "the floor amortizes on a long-lived stream" from prose into
-    an artifact: the floor is paid once per QUERY, each additional
-    micro-batch costs a fraction of it. Asserted: marginal < floor for
-    every class."""
-    import itertools as it
-    import time as _t
-
-    from pyspark.sql import functions as F
-
-    import dataengineeringutils_spark.sources.python_stream_source as pss
-
-    ctr = it.count()
-    out: dict = {"n_batches": N_AMORT_BATCHES}
-
-    # jvm: N one-row parquet files, maxFilesPerTrigger=1, availableNow
-    src = scratch_dir("amort_jvm")
-    for i in range(N_AMORT_BATCHES):
-        spark.range(1).coalesce(1).write.mode("overwrite").parquet(
-            f"{src}/f={i}"
-        )
-    name = f"amort_{next(ctr)}"
-    q = (
-        spark.readStream.schema("id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/f=*")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ram_scratch_dir(f"ck_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _, out["jvm_marginal_batch_sec"] = _marginal(q.recentProgress)
-
-    # python_source: rate-limited queue (max_segments_per_batch=1 — the
-    # Kafka maxOffsetsPerTrigger analogue) on a processingTime(0)
-    # trigger; availableNow snapshots the first offset and would stop
-    # after one batch for a Python source, so the long-lived-stream
-    # shape is the honest probe here anyway.
-    base = scratch_dir("amort_q")
-    seg = os.path.join(base, "p=0")
-    os.makedirs(seg, exist_ok=True)
-    for i in range(N_AMORT_BATCHES):
-        with open(os.path.join(seg, f"{i:08d}.json"), "w") as f:
-            f.write(f'{{"event_id": {i}, "event_type": "a", "value": 1.0}}\n')
-    spark.dataSource.register(pss.QueueDataSource)
-    name = f"amort_{next(ctr)}"
-    q = (
-        spark.readStream.format("file_queue")
-        .option("path", base)
-        .option("max_segments_per_batch", "1")
-        .load()
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ram_scratch_dir(f"ck_{name}"))
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    t0 = _t.time()
-    while (
-        spark.table(name).count() < N_AMORT_BATCHES and _t.time() - t0 < 120
-    ):
-        _t.sleep(0.2)
-    q.stop()
-    q.awaitTermination()
-    _, out["python_source_marginal_batch_sec"] = _marginal(q.recentProgress)
-
-    # stateful_join: two file sources advancing one file per batch
-    # through a watermarked left-outer stream-stream join — marginal
-    # includes the per-batch state-store commits and eviction work.
-    src = scratch_dir("amort_state")
-    for i in range(N_AMORT_BATCHES):
-        df = spark.createDataFrame(
-            [(i, f"2024-01-01 {i:02d}:00:00")], "id long, ts_s string"
-        ).select("id", F.col("ts_s").cast("timestamp").alias("ts"))
-        df.coalesce(1).write.mode("overwrite").parquet(f"{src}/a/f={i}")
-        df.coalesce(1).write.mode("overwrite").parquet(f"{src}/b/f={i}")
-    a = (
-        spark.readStream.schema("id long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/a/f=*")
-        .withWatermark("ts", "1 hour")
-    )
-    b = (
-        spark.readStream.schema("id long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/b/f=*")
-        .withWatermark("ts", "1 hour")
-        .select(F.col("id").alias("b_id"), F.col("ts").alias("b_ts"))
-    )
-    joined = a.join(
-        b,
-        (F.col("id") == F.col("b_id"))
-        & (F.col("b_ts") >= F.col("ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("b_ts") <= F.col("ts")),
-        "left_outer",
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    name = f"amort_{next(ctr)}"
-    try:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ram_scratch_dir(f"ck_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    _, out["stateful_join_marginal_batch_sec"] = _marginal(q.recentProgress)
-
-    for cls in ("jvm", "python_source", "stateful_join"):
-        out[f"{cls}_marginal_batch_sec"] = round(
-            out[f"{cls}_marginal_batch_sec"], 4
+            f"(committed floor {floor:.2f}s x{MULT_BOUND} / +{ADD_BOUND_S}s)"
+            " — its own plan got more expensive, not just the machinery"
         )
     # Amortization is asserted for the two floor-EXCEPTED classes (the
     # ones whose fresh-query setup dominates their bench line): each
     # additional micro-batch must cost strictly less than starting a
-    # fresh query. The jvm class's floor already ≈ one micro-batch
-    # (0.2 s machinery), so there is nothing to amortize — recorded,
-    # not asserted.
+    # fresh query. The jvm class's floor already ≈ one micro-batch, so
+    # there is nothing to amortize — recorded, not asserted.
+    marginals = measure_marginals(spark)
     for cls in ("python_source", "stateful_join"):
-        marginal = out[f"{cls}_marginal_batch_sec"]
+        marginal = marginals[f"{cls}_marginal_batch_sec"]
         assert marginal < floors[cls], (
             f"{cls}: marginal per-batch cost {marginal:.2f}s is not below "
-            f"its fresh-query floor {floors[cls]:.2f}s — the floor does "
-            "not amortize"
+            f"its committed fresh-query floor {floors[cls]:.2f}s — the "
+            "floor does not amortize"
         )
-    return out
